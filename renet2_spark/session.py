@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def local_table(spark: SparkSession, rows, schema) -> DataFrame:
@@ -27,23 +29,25 @@ def local_table(spark: SparkSession, rows, schema) -> DataFrame:
     kg_edges' 15.8 task-seconds). The Arrow path converts on the
     driver and ships JVM-side record batches — no executor python.
     Values/schema are identical (explicit schema, object-dtype
-    passthrough); falls back to the plain path if pandas/Arrow is
-    unavailable."""
+    passthrough). pyspark sends an EMPTY pandas frame down the
+    Python-RDD path, so no rows gives an empty JVM relation instead.
+    Falls back to the plain path only if pandas is not installed — a
+    schema or conversion error raises."""
+    if not isinstance(schema, T.StructType):
+        schema = T.DataType.fromDDL(schema)
+    rows = list(rows)
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+        )
     try:
         import pandas as pd
-        from pyspark.sql import types as _T
-
-        if isinstance(schema, _T.StructType):
-            names = schema.fieldNames()
-        else:
-            names = [f.split()[0] for f in str(schema).split(",")]
-        rows = list(rows)
-        pdf = pd.DataFrame(
-            (tuple(r) for r in rows), columns=names, dtype=object
-        ) if rows else pd.DataFrame({n: [] for n in names}, dtype=object)
-        return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
+    except ImportError:
         return spark.createDataFrame(rows, schema)
+    pdf = pd.DataFrame(
+        (tuple(r) for r in rows), columns=schema.fieldNames(), dtype=object
+    )
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def get_spark(

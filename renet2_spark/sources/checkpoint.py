@@ -20,14 +20,36 @@ input_fingerprint) is already COMMITTED in lineage is skipped on
 resume; anything else is (re)computed and overwritten atomically via
 dynamic partition overwrite. part_key = hash-bucket of doc_id, so the
 unit of resume is stable under repartitioning and cluster size.
+
+Job sequence of one ``run_stage`` with work to do (one Spark action
+each; AQE may split an action into a few jobs):
+
+  1. input materialisation — the fingerprint job; it fills the
+     persisted, part-keyed input, which stays cached for the stage's
+     duration so the recomputed subset reads it instead of
+     re-running the input's plan (for ``build_edges`` that plan is the
+     whole Python splitter/tokenizer/tagger chain);
+  2. output materialisation — the per-bucket row counts, which also
+     feed the stray-key guard before anything is written;
+  3. data write — dynamic partition overwrite of the recomputed
+     buckets;
+  4. lineage append.
+
+A no-op resume runs job 1 only. Both persists are released on every
+path out. Lineage and metrics rows are built on the driver through
+``session.local_table`` (Arrow), so the bookkeeping writes run no
+Python worker.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import local_table
 
 LINEAGE_SCHEMA = (
     "stage string, part_key int, input_fingerprint string, status string, "
@@ -90,8 +112,18 @@ class CheckpointStore:
         p = self._lineage_path(stage)
         try:
             return self.spark.read.parquet(p)
-        except Exception:
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        except AnalysisException as e:
+            # only "nothing committed yet" reads as empty — no lineage
+            # dir, or one holding no data file (a first append killed
+            # before its commit leaves just `_temporary/`). A lineage
+            # table that exists but cannot be read must raise, not
+            # silently turn into "recompute every bucket".
+            if e.getCondition() not in (
+                "PATH_NOT_FOUND",
+                "UNABLE_TO_INFER_SCHEMA",
+            ):
+                raise
+            return local_table(self.spark, [], LINEAGE_SCHEMA)
 
     def committed(self, stage: str) -> DataFrame:
         """Latest lineage row per part_key, filtered to COMMITTED."""
@@ -117,77 +149,88 @@ class CheckpointStore:
         resumes past COMMITTED buckets whose input fingerprint is
         unchanged. Returns the stage output DataFrame (reading back
         from the checkpoint so downstream stages see one lineage)."""
-        keyed = with_part_key(inp, key_col, buckets)
-        fps = input_fingerprint(keyed, key_col)
-        done = self.committed(stage).select(
-            "part_key", F.col("input_fingerprint").alias("_done_fp")
-        )
-        todo_keys = (
-            fps.join(done, "part_key", "left")
-            .filter(
-                F.col("_done_fp").isNull()
-                | (F.col("_done_fp") != F.col("input_fingerprint"))
+        # persisted BEFORE fingerprinting: the fingerprint job (job 1)
+        # materialises the input once and the recomputed subset reads
+        # that cache — without it the input's plan runs twice
+        keyed = with_part_key(inp, key_col, buckets).persist()
+        out = None
+        try:
+            fps = input_fingerprint(keyed, key_col)
+            done = self.committed(stage).select(
+                "part_key", F.col("input_fingerprint").alias("_done_fp")
             )
-            .select("part_key", "input_fingerprint")
-        )
-        todo = [
-            (r["part_key"], r["input_fingerprint"]) for r in todo_keys.collect()
-        ]
-        if todo:
-            part_keys = [k for k, _ in todo]
-            subset = keyed.filter(F.col("part_key").isin(part_keys))
-            out = transform(subset.drop("part_key"))
-            out = with_part_key(out, key_col, buckets).persist()
-            # ONE pass over the cached output serves both the
-            # key-preservation guard and the lineage row counts (was
-            # two separate actions — measured as a fixed cost that
-            # capped scaling efficiency in the cluster bench):
-            counts = {
-                r["part_key"]: r["n"]
-                for r in out.groupBy("part_key")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            # guard: a transform that rewrites key values would emit
-            # rows bucketed OUTSIDE the recomputed set, and dynamic
-            # overwrite would then clobber committed partitions with
-            # partial data — fail loudly BEFORE any write
-            allowed = set(part_keys)
-            stray = sum(n for k, n in counts.items() if k not in allowed)
-            if stray:
-                out.unpersist()
-                raise ValueError(
-                    f"run_stage('{stage}'): transform emitted {stray} rows "
-                    f"whose {key_col} hashes outside the recomputed buckets "
-                    f"{sorted(part_keys)} — transforms must preserve "
-                    f"{key_col} values (per-bucket idempotent resume)"
+            todo_keys = (
+                fps.join(done, "part_key", "left")
+                .filter(
+                    F.col("_done_fp").isNull()
+                    | (F.col("_done_fp") != F.col("input_fingerprint"))
                 )
-            # atomic per-partition replace (dynamic overwrite). The
-            # pre-write repartition clusters each bucket into ONE task:
-            # without it every task writes into every bucket dir —
-            # tasks x buckets small files (measured 1,024 files, 6.6s;
-            # clustered: 32 files, 2.4s at 8 cores). At warehouse scale
-            # the small-file explosion is the bigger problem than the
-            # extra shuffle (which AQE sizes off the cached output).
-            out.repartition("part_key").write.mode("overwrite").partitionBy(
-                "part_key"
-            ).parquet(self._data_path(stage))
-            out.unpersist()
-            lin_rows = [
-                (stage, int(k), fp, "COMMITTED", int(counts.get(k, 0)))
-                for k, fp in todo
+                .select("part_key", "input_fingerprint")
+            )
+            todo = [
+                (r["part_key"], r["input_fingerprint"])
+                for r in todo_keys.collect()
             ]
-            self.spark.createDataFrame(
-                lin_rows,
-                "stage string, part_key int, input_fingerprint string, "
-                "status string, rows_out long",
-            ).withColumn("updated_at", F.current_timestamp()).write.mode(
-                "append"
-            ).parquet(self._lineage_path(stage))
+            if todo:
+                part_keys = [k for k, _ in todo]
+                subset = keyed.filter(F.col("part_key").isin(part_keys))
+                out = transform(subset.drop("part_key"))
+                out = with_part_key(out, key_col, buckets).persist()
+                # job 2: ONE pass over the cached output serves both the
+                # key-preservation guard and the lineage row counts
+                counts = {
+                    r["part_key"]: r["n"]
+                    for r in out.groupBy("part_key")
+                    .agg(F.count("*").alias("n"))
+                    .collect()
+                }
+                # guard: a transform that rewrites key values would emit
+                # rows bucketed OUTSIDE the recomputed set, and dynamic
+                # overwrite would then clobber committed partitions with
+                # partial data — fail loudly BEFORE any write
+                allowed = set(part_keys)
+                stray = sum(n for k, n in counts.items() if k not in allowed)
+                if stray:
+                    raise ValueError(
+                        f"run_stage('{stage}'): transform emitted {stray} "
+                        f"rows whose {key_col} hashes outside the recomputed "
+                        f"buckets {sorted(part_keys)} — transforms must "
+                        f"preserve {key_col} values (per-bucket idempotent "
+                        f"resume)"
+                    )
+                # job 3: atomic per-partition replace (dynamic
+                # overwrite). The pre-write repartition clusters each
+                # bucket into ONE task: without it every task writes
+                # into every bucket dir — tasks x buckets small files
+                # (measured 1,024 files, 6.6s; clustered: 32 files, 2.4s
+                # at 8 cores). At warehouse scale the small-file
+                # explosion is the bigger problem than the extra shuffle
+                # (which AQE sizes off the cached output).
+                out.repartition("part_key").write.mode(
+                    "overwrite"
+                ).partitionBy("part_key").parquet(self._data_path(stage))
+                # job 4: lineage append; rows built on the driver (Arrow)
+                lin_rows = [
+                    (stage, int(k), fp, "COMMITTED", int(counts.get(k, 0)))
+                    for k, fp in todo
+                ]
+                local_table(
+                    self.spark,
+                    lin_rows,
+                    "stage string, part_key int, input_fingerprint string, "
+                    "status string, rows_out long",
+                ).withColumn("updated_at", F.current_timestamp()).write.mode(
+                    "append"
+                ).parquet(self._lineage_path(stage))
+        finally:
+            keyed.unpersist()
+            if out is not None:
+                out.unpersist()
         return self.spark.read.parquet(self._data_path(stage)).drop("part_key")
 
     def record_metrics(self, stage: str, metrics: dict[str, float]) -> None:
-        self.spark.createDataFrame(
+        local_table(
+            self.spark,
             [(stage, k, float(v)) for k, v in metrics.items()],
             "stage string, metric string, value double",
         ).withColumn("updated_at", F.current_timestamp()).write.mode(

@@ -1,6 +1,7 @@
 """Resumability: kill-and-resume semantics via the per-partition
 lineage table (north_rule)."""
 
+import os
 import shutil
 import tempfile
 
@@ -160,6 +161,101 @@ def test_key_rewriting_transform_fails_loudly(spark, root):
 
     with pytest.raises(ValueError, match="hashes outside"):
         store.run_stage("bad", _docs(spark), bad)
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_run_stage_releases_its_persists(spark, root):
+    """Input and output persists are released on every path out: a
+    normal run, a no-op resume and the stray-key refusal."""
+    store = CheckpointStore(spark, root)
+    base = _persisted(spark)
+    store.run_stage("bad", _docs(spark), lambda df: df)
+    assert _persisted(spark) == base
+    store.run_stage("bad", _docs(spark), lambda df: df)  # no-op resume
+    assert _persisted(spark) == base
+    lin = store.lineage("bad")
+    keep = lin.filter(F.col("part_key") != 0)
+    keep.write.mode("overwrite").parquet(root + "/bad/lineage_tmp")
+    shutil.rmtree(root + "/bad/lineage")
+    shutil.move(root + "/bad/lineage_tmp", root + "/bad/lineage")
+
+    def bad(df):
+        return df.select(
+            F.concat(F.lit("x"), F.col("doc_id")).alias("doc_id"), "text"
+        )
+
+    with pytest.raises(ValueError, match="hashes outside"):
+        store.run_stage("bad", _docs(spark), bad)
+    assert _persisted(spark) == base
+
+
+def test_stage_input_computed_once(spark, root):
+    """The stage input's plan runs once per run_stage: the fingerprint
+    job fills the input cache and the recomputed subset reads it."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(text):
+        acc.add(1)
+        return len(text)
+
+    n_chars = F.udf(bump, "int")
+    docs = _docs(spark)
+    inp = docs.withColumn("n_chars2", n_chars("text"))
+    CheckpointStore(spark, root).run_stage("stats", inp, lambda df: df)
+    assert acc.value == docs.count()
+
+
+def test_corrupt_lineage_raises(spark, root):
+    """Only a missing lineage table reads as "nothing committed"; an
+    unreadable one must raise instead of recomputing every bucket."""
+    store = CheckpointStore(spark, root)
+    store.run_stage("stats", _docs(spark), lambda df: df)
+    lin = root + "/stats/lineage"
+    shutil.rmtree(lin)
+    os.makedirs(lin)
+    with open(lin + "/part-00000-corrupt.snappy.parquet", "wb") as f:
+        f.write(b"not a parquet file " * 64)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        store.run_stage("stats", _docs(spark), lambda df: df)
+
+
+def test_interrupted_first_lineage_append_resumes(spark, root):
+    """A first lineage append killed before its commit leaves only
+    `_temporary/`: that is "nothing committed", not a read error."""
+    store = CheckpointStore(spark, root)
+    store.run_stage("stats", _docs(spark), lambda df: df)
+    lin = root + "/stats/lineage"
+    shutil.rmtree(lin)
+    os.makedirs(lin + "/_temporary/0")
+    out = store.run_stage("stats", _docs(spark), lambda df: df)
+    assert out.count() == 500
+    assert store.committed("stats").count() == 32
+
+
+def test_local_table_empty_keeps_schema(spark):
+    from renet2_spark.session import local_table
+
+    empty = local_table(spark, [], "k string, v long")
+    assert empty.schema.simpleString() == "struct<k:string,v:bigint>"
+    assert empty.count() == 0
+
+
+def test_local_table_conversion_error_raises(spark, monkeypatch):
+    """Only a missing pandas falls back to the Python-RDD path; any
+    other failure raises instead of silently costing Python workers."""
+    import pandas as pd
+
+    from renet2_spark.session import local_table
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("conversion failed")
+
+    monkeypatch.setattr(pd, "DataFrame", broken)
+    with pytest.raises(RuntimeError, match="conversion failed"):
+        local_table(spark, [("a", 1)], "k string, v long")
 
 
 def test_metrics_roundtrip(spark, root):
